@@ -22,6 +22,8 @@ Spark-side expressions are plain SQL strings usable with F.expr()
 
 from __future__ import annotations
 
+import threading
+
 HASH_MOD = 1_000_000_007
 HASH_SEED = 7
 HASH_MULT = 31
@@ -206,29 +208,35 @@ def fan_out(df, parts: int | None = None, light: bool = False):
 STAGING_DIR_CONF = "spark.etl_service.stagingDir"
 
 
+# Guards the staged-relation memo below and the session tokens in its keys.
+_MEMO_LOCK = threading.Lock()
+
+
 def staging_dir(spark) -> str:
     return spark.conf.get(STAGING_DIR_CONF, "") or ""
 
 
 def session_token(spark) -> str:
-    """Session-unique cache-key component for the staged-relation
-    memos. ``id(spark)`` is NOT safe: CPython recycles addresses, so a
-    new session allocated where a stopped one lived would alias the
-    old cache entries and return temp-view names that only existed in
-    the dead session. A uuid pinned on the session object dies with
-    it."""
+    """Session-unique key component for the staged-relation memo.
+    ``id(spark)`` is NOT safe: CPython recycles addresses, so a new
+    session allocated where a stopped one lived would alias the old
+    memo entries and return temp-view names that only existed in the
+    dead session. A uuid pinned on the session object dies with
+    it. Pinned under the memo lock: threads sharing a fresh session
+    must not pin two different tokens."""
     import uuid as _uuid
 
-    tok = getattr(spark, "_etl_stage_token", None)
-    if tok is None:
-        tok = _uuid.uuid4().hex
-        spark._etl_stage_token = tok
+    with _MEMO_LOCK:
+        tok = getattr(spark, "_etl_stage_token", None)
+        if tok is None:
+            tok = _uuid.uuid4().hex
+            spark._etl_stage_token = tok
     return tok
 
 
 def lineage_key(df) -> tuple:
-    """Cache-key component identifying a DataFrame's INPUT DATA for the
-    staged-relation memos. For file-backed relations this is the sorted
+    """Key component identifying a DataFrame's INPUT DATA for the
+    staged-relation memo. For file-backed relations this is the sorted
     file list — stable and content-addressing (a different sf_dir is a
     different key). For a relation with NO input files (a temp view
     over an in-memory DataFrame) there is no usable identity: returning
@@ -260,9 +268,9 @@ def stage_name(prefix: str, key: tuple) -> str:
 def stage_df(df, name: str):
     """Materialize a staging relation with truncated lineage — via
     parquet under ``STAGING_DIR_CONF`` when configured, else
-    localCheckpoint. Callers that memoize the result must include
-    ``staging_dir(spark)`` in their cache key so flipping the conf
-    re-stages instead of returning the old backend's relation."""
+    localCheckpoint. The memo key includes ``staging_dir(spark)``, so
+    flipping the conf re-stages instead of returning the old backend's
+    relation."""
     import os
 
     spark = df.sparkSession
@@ -274,29 +282,92 @@ def stage_df(df, name: str):
     return df.localCheckpoint(eager=True)
 
 
-_STAGE_VIEW_CACHE: dict[tuple, str] = {}
+# The staged-relation memo: (session token, kind, params, lineage,
+# staging dir) -> whatever the build step produced — a staged view
+# name, a scalar count, persisted DataFrames, state directories. One
+# materialize-once rule for every staged relation in the engine.
+# Orchestrator steps share a session from a thread pool: one build
+# lock per key makes concurrent requests for a key wait for its single
+# build (two builders of one content-addressed stage would race on one
+# staging path), while different keys still build concurrently.
+_MEMO: dict[tuple, object] = {}
+_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
 
 
-def stage_view(spark, df_fn, kind: str, view: str, params: tuple = ()) -> str:
-    """Generic memoized staged relation over a registered input view —
-    the shared staging discipline (one materialization per (session,
-    kind, params, input lineage, staging backend), content-addressed
-    temp-view name) exposed for the plans layer; operator modules keep
-    their local caches."""
-    key = (
-        session_token(spark),
-        kind,
-        tuple(params),
-        lineage_key(spark.table(view)),
-        staging_dir(spark),
-    )
-    cached = _STAGE_VIEW_CACHE.get(key)
-    if cached is not None:
-        return cached
-    name = stage_name(f"{kind}_{view}", key[1:])
-    stage_df(df_fn(), name).createOrReplaceTempView(name)
-    _STAGE_VIEW_CACHE[key] = name
-    return name
+def memo(spark, kind: str, params: tuple, lineage, build):
+    """Return ``build()``'s value for (session, kind, params, lineage,
+    staging backend), building it on the first request only.
+
+    ``lineage`` identifies the input data: ``lineage_key(spark.table(
+    view))`` for a file-backed input, the upstream stage's name for a
+    stage built on another stage. Never pass lineage_key of a
+    checkpointed relation: it has no input files, so every call would
+    get a fresh uuid and re-stage.
+
+    A request whose lineage differs from a cached entry of the same
+    (session, kind, params) evicts that entry and unpersists any
+    DataFrames it holds: a session that re-points its views at new data
+    never asks for the old copy again, and without eviction each switch
+    would pin another copy for the session's lifetime. Entries of other
+    live sessions are untouched."""
+    key = (session_token(spark), kind, tuple(params), lineage, staging_dir(spark))
+    with _MEMO_LOCK:
+        build_lock = _BUILD_LOCKS.setdefault(key, threading.Lock())
+    with build_lock:
+        with _MEMO_LOCK:
+            if key in _MEMO:
+                return _MEMO[key]
+        value = build()
+        with _MEMO_LOCK:
+            stale = [k for k in _MEMO if k[:3] == key[:3] and k[3] != lineage]
+            evicted = [_MEMO.pop(k) for k in stale]
+            for k in stale:
+                _BUILD_LOCKS.pop(k, None)
+            _MEMO[key] = value
+    for held in evicted:
+        for item in held if isinstance(held, tuple) else (held,):
+            if hasattr(item, "unpersist"):
+                item.unpersist()
+    return value
+
+
+def stage_view(spark, df_fn, kind: str, view: str, params: tuple = (), lineage=None) -> str:
+    """Memoized staged relation: ``df_fn()`` materialized once per memo
+    key (see memo) with stage_df and registered under a content-
+    addressed temp-view name, which is returned. ``lineage`` defaults
+    to the input view's files; pass the upstream stage's name for a
+    stage built on another stage."""
+    if lineage is None:
+        lineage = lineage_key(spark.table(view))
+    params = (view, *params)
+
+    def build() -> str:
+        name = stage_name(f"{kind}_{view}", (kind, params, lineage, staging_dir(spark)))
+        stage_df(df_fn(), name).createOrReplaceTempView(name)
+        return name
+
+    return memo(spark, kind, params, lineage, build)
+
+
+def state_dir(spark, prefix: str) -> str:
+    """Fresh directory for persisted operator state (snapshot tables,
+    round-trip files, fingerprint stores) with a lifecycle: under the
+    session staging dir when one is configured (its owner cleans it
+    up), otherwise a mkdtemp removed at interpreter exit."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+    import uuid as _uuid
+
+    base = staging_dir(spark)
+    if base:
+        d = os.path.join(base, f"{prefix}{_uuid.uuid4().hex[:10]}")
+        os.makedirs(d, exist_ok=True)
+        return d
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def warm_udfs(spark) -> None:

@@ -189,22 +189,13 @@ def connected_components_twophase(
     )
 
 
-# (session id, tau, pairs view) -> staged cluster assignment view. The
-# iterative label propagation (checkpoint + convergence probe per
-# round) re-running for every consumer would be like re-deriving a
-# staging table per reader; clusters are written once and joined from
-# there — same story as the pairs and fingerprint relations.
-_CLUSTERS_CACHE: dict[tuple, str] = {}
-
-
 def staged_pairs_view(spark: SparkSession, tau: float = 0.8) -> str:
     """Name of the staged near-dup pair view, shared by the clustering
     path, the triangle census and every other pair consumer. Round 11:
     dedup.ngram_jaccard_staged_view now stages the verified pairs
     itself (one memoized materialization for ALL consumers, including
     the standalone query and the recall report), so this is a pure
-    delegation — the old _PAIRS_CACHE checkpointed the already-staged
-    output a second time."""
+    delegation."""
     from . import dedup
 
     return dedup.ngram_jaccard_staged_view(spark, tau=tau)
@@ -215,18 +206,19 @@ def dup_clusters(spark: SparkSession, tau: float = 0.8) -> DataFrame:
     memoized fingerprint relation with the other dedup consumers, and
     stages both the pair list and the cluster assignment — clustering
     consumes the pairs table and WRITES the clusters table; readers
-    like the training pipeline join the staged result)."""
+    like the training pipeline join the staged result). The iterative
+    label propagation (checkpoint + convergence probe per round) runs
+    once per pairs view: clusters are written once and joined from
+    there, like the pairs and fingerprint relations."""
     from ..functions import portable as P
 
     name = staged_pairs_view(spark, tau)
-    ckey = (P.session_token(spark), tau, name)
-    cname = _CLUSTERS_CACHE.get(ckey)
-    if cname is None:
-        cname = P.stage_name("dup_clusters", ckey[1:])
-        cc = connected_components(spark.table(name))
-        P.stage_df(cc, cname).createOrReplaceTempView(cname)
-        _CLUSTERS_CACHE[ckey] = cname
-    return spark.table(cname)
+    return spark.table(
+        P.stage_view(
+            spark, lambda: connected_components(spark.table(name)),
+            "dup_clusters", name, lineage=name,
+        )
+    )
 
 
 def dup_clusters_oracle_sql(tau: float = 0.8) -> str:
@@ -274,24 +266,15 @@ FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
 """
 
 
-# (session token, input lineage) -> (persisted contrib_src, persisted
-# nodes, node count). The SAME memoized-staging discipline as every
-# staged relation: exactly ONE pinned copy of the edge relation per
-# (session, data), shared by the plain and salted variants — per-call
-# persist + unpersist was measured to forfeit the cross-call cache
-# reuse (salted-after-plain 2.2 s vs 6.2 s at sf0.1), while never
-# unpersisting accumulated one pinned copy per call.
-_PR_EDGE_CACHE: dict[tuple, tuple] = {}
-
-
 def _broadcast_threshold_bytes(spark) -> int:
     """spark.sql.autoBroadcastJoinThreshold in BYTES, honoring byte-unit
     suffixes ('64MB', '1g', …) — ADVICE r11: a bare int() raises on
     suffixed values and silently fell back to 10 MiB, flipping the
     size-adaptive join branches away from the measured-fastest shape.
     Perf-only in every caller (values are join-strategy-independent).
-    -1 / unset disables auto-broadcast: return 0 so size gates fail
-    closed (nothing "fits")."""
+    -1 disables auto-broadcast and an unparseable value is no evidence
+    of a budget: both return 0 so size gates fail closed (nothing
+    "fits")."""
     raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
     s = raw.strip().lower()
     mult = 1
@@ -306,33 +289,26 @@ def _broadcast_threshold_bytes(spark) -> int:
     try:
         val = int(s) * mult
     except ValueError:
-        val = 10 * 1024 * 1024
+        val = 0
     return max(0, val)
 
 
-def _evict_stale(cache: dict, key: tuple) -> None:
-    """Unpersist + drop every cache entry sharing ``key``'s session
-    token but holding a DIFFERENT lineage: a session that re-points its
-    views at new data (a new sf_dir) will never ask for the old edge
-    copy again, and without eviction each lineage switch pins another
-    full edge relation in executor memory for the session's lifetime
-    (round-10 ADVICE). Entries of OTHER live sessions are untouched."""
-    token = key[0]
-    for old in [k for k in cache if k[0] == token and k != key]:
-        for item in cache.pop(old):
-            if hasattr(item, "unpersist"):
-                item.unpersist()
-
-
 def _pagerank_edges(spark: SparkSession) -> tuple:
+    """(persisted contrib_src, persisted nodes, node count), memoized:
+    exactly ONE pinned copy of the edge relation per (session, data),
+    shared by the plain and salted variants — per-call persist +
+    unpersist was measured to forfeit the cross-call cache reuse
+    (salted-after-plain 2.2 s vs 6.2 s at sf0.1), while never
+    unpersisting accumulated one pinned copy per call."""
     from ..functions import portable as P
 
     pairs = spark.sql(PR_PAIRS_SQL)
-    key = (P.session_token(spark), P.lineage_key(pairs))
-    hit = _PR_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _evict_stale(_PR_EDGE_CACHE, key)
+    return P.memo(
+        spark, "pr_edges", (), P.lineage_key(pairs), lambda: _build_pagerank_edges(pairs)
+    )
+
+
+def _build_pagerank_edges(pairs: DataFrame) -> tuple:
     # customer and (offset) supplier ids live in disjoint ranges, so the
     # symmetric union of an already-DISTINCT pair set cannot contain
     # duplicates — no second distinct (saves a full shuffle+dedup over
@@ -355,9 +331,7 @@ def _pagerank_edges(spark: SparkSession) -> tuple:
     # denominator and the rank init); contrib_src is hash-partitioned
     # on a, so this distinct reuses the exchange
     nodes = contrib_src.select("a").distinct().persist()
-    hit = (contrib_src, nodes, nodes.count())
-    _PR_EDGE_CACHE[key] = hit
-    return hit
+    return contrib_src, nodes, nodes.count()
 
 
 def pagerank(
@@ -479,7 +453,9 @@ SELECT node, CAST(rank AS BIGINT) AS rank FROM pr WHERE it = {PR_ITERS}
 """
 
 
-def triangle_stats(edges: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
+def triangle_stats(
+    spark: SparkSession, edges: str, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
     """Triangle / wedge census of an undirected graph — the standard
     QA metric for a near-dup pair relation: high transitivity means
     the pair graph is close to a disjoint union of cliques (safe to
@@ -503,56 +479,46 @@ def triangle_stats(edges: DataFrame, a: str = "doc_a", b: str = "doc_b") -> Data
     keyed on node ids; no global sort, no driver materialization.
 
     The canonical edge list, the degree relation and the oriented edge
-    list are each STAGED (stage_df: one eager materialization, lineage
-    truncated) before fan-out: canon feeds four consumers (degrees,
-    the degree join, the wedge close-back, the edge count), deg three
-    and oriented two — left lazy, Spark re-executes each subtree once
-    per reference and the re-derivations CASCADE (the round-11 before
-    plan shows 62 Exchanges; staged, each relation is computed once —
-    the same discipline as the staged pairs view this census reads).
+    list are each STAGED before fan-out: canon feeds four consumers
+    (degrees, the degree join, the wedge close-back, the edge count),
+    deg three and oriented two — left lazy, Spark re-executes each
+    subtree once per reference and the re-derivations CASCADE (the
+    round-11 before plan shows 62 Exchanges; staged, each relation is
+    computed once). ``edges`` names a content-addressed view (the
+    staged pairs view, like dup_clusters reads): the three stages are
+    memoized on that name, so a repeat call re-stages nothing.
     """
     from ..functions import portable as P
 
-    # Staging key (ADVICE r11 #2): lineage_key alone (input FILES) is
-    # not content-addressing here — the (a, b) column choice and any
-    # upstream filter/transform of `edges` are invisible to it, so two
-    # different edge relations over the same files would map to the
-    # same staged path and overwrite each other cross-session. Include
-    # the column pair and a digest of the analyzed edge plan.
-    import hashlib
+    def stage(kind: str, df_fn) -> DataFrame:
+        return spark.table(P.stage_view(spark, df_fn, kind, edges, (a, b), lineage=edges))
 
-    plan_digest = hashlib.sha1(
-        edges._jdf.queryExecution().analyzed().toString().encode()
-    ).hexdigest()[:12]
-    lk = P.lineage_key(edges) + (a, b, plan_digest)
-    raw = edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
-    canon = P.stage_df(
-        raw.filter(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")
-        )
+    canon = stage(
+        "tri_canon",
+        lambda: spark.table(edges)
+        .select(F.col(a).alias("x"), F.col(b).alias("y"))
+        .filter(F.col("x") != F.col("y"))
+        .select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
         .distinct(),
-        P.stage_name("tri_canon", lk),
     )
-    deg = P.stage_df(
-        canon.select(F.col("u").alias("node"))
+    deg = stage(
+        "tri_deg",
+        lambda: canon.select(F.col("u").alias("node"))
         .unionAll(canon.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("d")),
-        P.stage_name("tri_deg", lk),
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    with_deg = canon.join(du, "u").join(dv, "v")
     lower_u = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = P.stage_df(
-        with_deg.select(
+    oriented = stage(
+        "tri_oriented",
+        lambda: canon.join(du, "u").join(dv, "v").select(
             F.when(lower_u, F.col("u")).otherwise(F.col("v")).alias("x"),
             F.when(lower_u, F.col("v")).otherwise(F.col("u")).alias("y"),
         ),
-        P.stage_name("tri_oriented", lk),
     )
     p, q = oriented.alias("p"), oriented.alias("q")
     wedge = p.join(
@@ -646,24 +612,21 @@ def degree_distribution_sql() -> tuple[str, str]:
 
 BFS_SEED_MOD = 97  # deterministic seed set: node % 97 == 0
 
-# (session token, pairs lineage) -> (persisted symmetric edges,
-# checkpointed seed distances, seed count). Same memoized-staging
-# discipline as _PR_EDGE_CACHE: ONE pinned copy of the edge relation
-# per (session, data) — the symmetric build + seed derivation was
-# ~2.0 s of graph_bfs_layers' 3.6 s at sf0.1 (round-9 verdict #6
-# profile), paid once per session instead of per call.
-_BFS_STAGE_CACHE: dict[tuple, tuple] = {}
-
-
 def _bfs_stage(spark: SparkSession) -> tuple:
+    """(persisted symmetric edges, checkpointed seed distances, seed
+    count), memoized like _pagerank_edges: ONE pinned copy of the edge
+    relation per (session, data) — the symmetric build + seed
+    derivation was ~2.0 s of graph_bfs_layers' 3.6 s at sf0.1 (round-9
+    verdict #6 profile), paid once per session instead of per call."""
     from ..functions import portable as P
 
     pairs = spark.sql(PR_PAIRS_SQL)
-    key = (P.session_token(spark), P.lineage_key(pairs))
-    hit = _BFS_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _evict_stale(_BFS_STAGE_CACHE, key)
+    return P.memo(
+        spark, "bfs_stage", (), P.lineage_key(pairs), lambda: _build_bfs_stage(pairs)
+    )
+
+
+def _build_bfs_stage(pairs: DataFrame) -> tuple:
     sym = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).repartition("b").persist()
@@ -671,9 +634,7 @@ def _bfs_stage(spark: SparkSession) -> tuple:
     seeds = nodes.filter(F.col("node") % BFS_SEED_MOD == 0).withColumn(
         "d", F.lit(0)
     ).localCheckpoint()
-    hit = (sym, seeds, seeds.count())
-    _BFS_STAGE_CACHE[key] = hit
-    return hit
+    return sym, seeds, seeds.count()
 
 
 def bfs_layers(spark: SparkSession, k: int = 4) -> DataFrame:

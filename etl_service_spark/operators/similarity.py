@@ -20,33 +20,15 @@ work — no Python in the loop.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import portable as P
 
-# (session id, stage kind, params, input files) -> temp-view name of a
-# lineage-truncated staging relation (IVF assignments, LSH buckets).
-# Same sharing story as dedup._HASHSET_CACHE: on a cluster these are
-# written-once staging tables every consumer joins against; changing
-# the underlying files (different sf_dir) misses the cache.
-_STAGE_CACHE: dict[tuple, str] = {}
-
-
-def _stage_view(spark: SparkSession, df_fn, kind: str, view: str, params: tuple) -> str:
-    key = (
-        P.session_token(spark), kind, params,
-        P.lineage_key(spark.table(view)), P.staging_dir(spark),
-    )
-    cached = _STAGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    name = P.stage_name(f"{kind}_{view}", key[1:])
-    P.stage_df(df_fn(), name).createOrReplaceTempView(name)
-    _STAGE_CACHE[key] = name
-    return name
+# Lineage-truncated staging relations (IVF assignments, LSH buckets,
+# k-means iterations) go through portable.stage_view: on a cluster
+# these are written-once staging tables every consumer joins against;
+# changing the underlying files (different sf_dir) re-stages.
 
 DIM = 64
 
@@ -208,10 +190,6 @@ def cosine_topk_staged(
     scored = P.fan_out(emb, light=True).mapInPandas(
         kernel, schema="q_id bigint, n_id bigint, cosine double"
     )
-    # unique view name: steps share one session under the orchestrator's
-    # thread pool, so fixed names would race
-    view_name = f"__topk_cand_{id(scored)}"
-    scored.createOrReplaceTempView(view_name)
     # pandas->Arrow serialization maps the kernel's NaN cosines to SQL
     # NULL (pandas uses NaN as its NA sentinel); the kernel never emits
     # a legitimate NULL, so restore NULL -> NaN here and rank on the
@@ -224,9 +202,10 @@ SELECT q_id, n_id, rnk, cosine FROM (
          ROW_NUMBER() OVER (
            PARTITION BY q_id
            ORDER BY coalesce(cosine, CAST('NaN' AS DOUBLE)) DESC, n_id) AS rnk
-  FROM {view_name}
+  FROM {{scored}}
 ) WHERE rnk <= {k}
-"""
+""",
+        scored=scored,
     )
 
 
@@ -323,10 +302,7 @@ def embedding_neardup_pandas(
     if n_blocks is None:
         # scalar count only — no embedding rows leave the executors;
         # memoized per (session, view, files) like the staging views
-        ckey = (P.session_token(spark), "neardup_count", view, P.lineage_key(emb))
-        if ckey not in _STAGE_CACHE:
-            _STAGE_CACHE[ckey] = str(emb.count())
-        n = int(_STAGE_CACHE[ckey])
+        n = P.memo(spark, "neardup_count", (view,), P.lineage_key(emb), emb.count)
         n_blocks = _neardup_blocks(n, rows_per_block)
     # fan-out relation: block blk participates in pair (ba, bb) as
     # role 0 (first block) or role 1 (second); a diagonal pair
@@ -555,7 +531,7 @@ def ivf_assignment_rel(
             schema="vec_id bigint, c_id bigint, rn int, embedding array<float>, nrm double",
         )
 
-    return _stage_view(spark, build_assignment, "ivf_assign", view, (n_cells,))
+    return P.stage_view(spark, build_assignment, "ivf_assign", view, (n_cells,))
 
 
 def ivf_ann_staged(
@@ -756,25 +732,21 @@ def ivf_index_assign(
     the k*64-row snapshot is broadcast, the distance argmin is the same
     integer-exact kernel as training. Per-batch cost tracks the batch,
     never the corpus — the incremental half of the maintenance loop."""
-    import uuid
-
     from ..sources import snapshots
 
     big = big_t or _KM_SPARK_BIG
-    tag = uuid.uuid4().hex[:10]
-    bv, cv = f"__ivfb_{tag}", f"__ivfc_{tag}"
-    batch.select("vec_id", "embedding").createOrReplaceTempView(bv)
-    snapshots.read_snapshot(spark, index_dir).createOrReplaceTempView(cv)
     return spark.sql(
         "WITH "
         + ",\n".join(
             [
                 f"dims AS ({_KM_SPARK_DIMS})",
-                f"e AS ({_ivf_e_cte(_KM_SPARK_ELEM, bv)})",
-                f"d AS ({_ivf_dist_sql(cv, big, hint='/*+ BROADCAST(c) */ ')})",
+                f"e AS ({_ivf_e_cte(_KM_SPARK_ELEM, '{batch}')})",
+                f"d AS ({_ivf_dist_sql('{cents}', big, hint='/*+ BROADCAST(c) */ ')})",
             ]
         )
-        + f"\nSELECT vec_id, j FROM ({_ivf_assign_sql('d')}) z"
+        + f"\nSELECT vec_id, j FROM ({_ivf_assign_sql('d')}) z",
+        batch=batch.select("vec_id", "embedding"),
+        cents=snapshots.read_snapshot(spark, index_dir),
     )
 
 
@@ -804,30 +776,6 @@ def ivf_index_append_batch(
     return snapshots.merge_upsert(spark, assign_dir, assigned, key="vec_id")
 
 
-_IVF_INC_STATE: dict[tuple, tuple[str, str, str]] = {}
-
-
-def _ivf_state_dir(spark, prefix: str) -> str:
-    """Snapshot-state directory with a LIFECYCLE (round-5 advisor
-    finding: bare mkdtemp per (session, corpus) key accumulated
-    orphaned /tmp dirs across sessions). Rooted under the session
-    staging dir when one is configured (its owner already cleans it
-    up); otherwise a mkdtemp registered for atexit removal."""
-    import atexit
-    import shutil as _shutil
-    import tempfile
-    import uuid as _uuid
-
-    base = P.staging_dir(spark)
-    if base:
-        d = os.path.join(base, f"{prefix}{_uuid.uuid4().hex[:10]}")
-        os.makedirs(d, exist_ok=True)
-        return d
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(_shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
 def ivf_incremental_staged(
     spark: SparkSession, k: int = 4, view: str = "embeddings",
     big_t: str | None = None,
@@ -838,20 +786,14 @@ def ivf_incremental_staged(
     ``ivf_index_append_batch`` ticks, full-rebuild a second index over
     everything, and emit the per-cell churn report — value-identical to
     :func:`ivf_incremental_drift_sql`'s stateless DuckDB unroll, which
-    is exactly the point: the stateful path is oracle-checked."""
-    import uuid
-
+    is exactly the point: the stateful path is oracle-checked. The
+    three state directories are built once per (session, corpus)."""
     from ..sources import snapshots
 
-    key = (
-        P.session_token(spark), "ivf_inc", view, k,
-        P.lineage_key(spark.table(view)), P.staging_dir(spark),
-    )
-    state = _IVF_INC_STATE.get(key)
-    if state is None:
-        index_dir = _ivf_state_dir(spark, "etl_ivf_idx_")
-        assign_dir = _ivf_state_dir(spark, "etl_ivf_asg_")
-        rebuild_dir = _ivf_state_dir(spark, "etl_ivf_reb_")
+    def build() -> tuple[str, str]:
+        index_dir = P.state_dir(spark, "etl_ivf_idx_")
+        assign_dir = P.state_dir(spark, "etl_ivf_asg_")
+        rebuild_dir = P.state_dir(spark, "etl_ivf_reb_")
         ivf_index_build(
             spark, index_dir, k=k, view=view, base_filter=_IVF_INC_BASE, big_t=big_t
         )
@@ -863,24 +805,23 @@ def ivf_incremental_staged(
                 spark.table(view).filter(f"vec_id % 8 = {m}"), big_t,
             )
         ivf_index_build(spark, rebuild_dir, k=k, view=view, big_t=big_t)
-        _IVF_INC_STATE[key] = (index_dir, assign_dir, rebuild_dir)
-    index_dir, assign_dir, rebuild_dir = _IVF_INC_STATE[key]
+        return assign_dir, rebuild_dir
 
-    reb = ivf_index_assign(spark, rebuild_dir, spark.table(view), big_t)
-    tag = uuid.uuid4().hex[:10]
-    iv, rv = f"__ivfinc_{tag}", f"__ivfreb_{tag}"
-    snapshots.read_snapshot(spark, assign_dir).createOrReplaceTempView(iv)
-    reb.createOrReplaceTempView(rv)
+    assign_dir, rebuild_dir = P.memo(
+        spark, "ivf_inc", (view, k), P.lineage_key(spark.table(view)), build
+    )
     return spark.sql(
-        f"""
+        """
 SELECT i.j AS cell,
        CAST(SUM(CASE WHEN i.vec_id % 8 < 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
        CAST(SUM(CASE WHEN i.vec_id % 8 >= 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
        CAST(SUM(CASE WHEN i.j <> r.j THEN 1 ELSE 0 END) AS BIGINT) AS n_churn,
        CAST(SUM(CASE WHEN i.j <> r.j THEN 1 ELSE 0 END) * 1000 DIV COUNT(*) AS BIGINT)
          AS churn_permille
-FROM {iv} i JOIN {rv} r ON i.vec_id = r.vec_id
-GROUP BY i.j"""
+FROM {assigned} i JOIN {rebuilt} r ON i.vec_id = r.vec_id
+GROUP BY i.j""",
+        assigned=snapshots.read_snapshot(spark, assign_dir),
+        rebuilt=ivf_index_assign(spark, rebuild_dir, spark.table(view), big_t),
     )
 
 
@@ -964,7 +905,7 @@ def lsh_ann_staged(
                 }
             )
 
-    name = _stage_view(
+    name = P.stage_view(
         spark,
         lambda: P.fan_out(spark.table(view).select("vec_id", "embedding"), light=True).mapInPandas(
             kernel,
@@ -1209,7 +1150,7 @@ def _kmeans_staged_rels(
     big_t-independent, so consumers with different overflow gates
     (emb_kmeans's row-count-gated BIGINT vs the DECIMAL default)
     still share the one corpus pass."""
-    e_rel = _stage_view(
+    e_rel = P.stage_view(
         spark,
         lambda: spark.sql(
             f"WITH dims AS ({_KM_SPARK_DIMS}) "
@@ -1222,7 +1163,7 @@ def _kmeans_staged_rels(
         (),
     )
     cents = [
-        _stage_view(
+        P.stage_view(
             spark,
             lambda: spark.sql(
                 f"SELECT vec_id AS j, dim, v AS s, CAST(1 AS BIGINT) AS n "
@@ -1237,7 +1178,7 @@ def _kmeans_staged_rels(
     for it in range(1, iters + 1):
         a_body = _km_assign_sql(e_rel, cents[-1], big_t)
         assigns.append(
-            _stage_view(
+            P.stage_view(
                 spark,
                 lambda b=a_body: spark.sql(b),
                 "km_a",
@@ -1246,7 +1187,7 @@ def _kmeans_staged_rels(
             )
         )
         cents.append(
-            _stage_view(
+            P.stage_view(
                 spark,
                 lambda a=assigns[-1]: spark.sql(
                     f"SELECT a.j, e.dim, CAST(SUM(e.v) AS BIGINT) AS s, COUNT(*) AS n "
@@ -1403,10 +1344,7 @@ def semantic_dedup_staged(
 
     emb = spark.table(view).select("vec_id", "embedding")
     if n_blocks is None:
-        ckey = (P.session_token(spark), "neardup_count", view, P.lineage_key(emb))
-        if ckey not in _STAGE_CACHE:
-            _STAGE_CACHE[ckey] = str(emb.count())
-        n = int(_STAGE_CACHE[ckey])
+        n = P.memo(spark, "neardup_count", (view,), P.lineage_key(emb), emb.count)
         n_blocks = _neardup_blocks(n, rows_per_block)
     rel = [
         (blk, a, b, 0 if blk == a else 1)
@@ -1653,16 +1591,15 @@ def int8_topk_staged(
     scored = P.fan_out(emb, light=True).mapInPandas(
         kernel, schema="q_id bigint, n_id bigint, cos8 double"
     )
-    view_name = f"__int8_cand_{id(scored)}"
-    scored.createOrReplaceTempView(view_name)
     return spark.sql(
         f"""
 SELECT q_id, n_id FROM (
   SELECT q_id, n_id,
          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos8 DESC, n_id) AS rk
-  FROM {view_name}
+  FROM {{scored}}
 ) WHERE rk <= {k}
-"""
+""",
+        scored=scored,
     )
 
 
@@ -2114,7 +2051,7 @@ WHERE a.rn = 1 OR (a.vec_id < {n_queries} AND a.rn <= {nprobe})
 """
         )
 
-    return _stage_view(spark, build, "ivfpq_res", view, params)
+    return P.stage_view(spark, build, "ivfpq_res", view, params)
 
 
 def ivfpq_topk_staged(
@@ -2149,11 +2086,8 @@ WITH assign AS (
 """ + _ivfpq_tail(0, ncent, m, nprobe, k, n_queries, res_src=rres)
         return spark.sql(sql)
 
-    rel = _stage_view(spark, build, "ivfpq_topk", view, params)
+    rel = P.stage_view(spark, build, "ivfpq_topk", view, params)
     return spark.table(rel)
-
-
-_PQ_DIST_CACHE: dict[tuple, str] = {}
 
 
 def _pq_dist_staged(
@@ -2163,18 +2097,15 @@ def _pq_dist_staged(
     (session, view, params): both the code assignment and the ADC
     lookup table consume it, and Spark's CTE inlining would otherwise
     evaluate the 64-term distance chain twice over N×ncent×m rows."""
-    src = spark.table(view)
-    key = (P.session_token(spark), view, m, ncent, P.lineage_key(src), P.staging_dir(spark))
-    name = _PQ_DIST_CACHE.get(key)
-    if name is None:
-        name = P.stage_name("pq_dist", key[1:])
-        # same builder as the SQL statements — no text scraping
-        c_sel, d_sel = _pq_cd_selects(m, ncent, view, 0)
-        P.stage_df(
-            P.fan_out(spark.sql(f"WITH c AS ({c_sel}) {d_sel}"), light=True), name
-        ).createOrReplaceTempView(name)
-        _PQ_DIST_CACHE[key] = name
-    return name
+    # same builder as the SQL statements — no text scraping
+    c_sel, d_sel = _pq_cd_selects(m, ncent, view, 0)
+    return P.stage_view(
+        spark,
+        lambda: P.fan_out(spark.sql(f"WITH c AS ({c_sel}) {d_sel}"), light=True),
+        "pq_dist",
+        view,
+        (m, ncent),
+    )
 
 
 def pq_adc_topk_staged(
@@ -2363,7 +2294,7 @@ def _hamsig_labeled_rel(spark: SparkSession, view: str) -> str:
             f"{_sign_word_sql(1, one_based=False)} AS hi FROM {view}"
         )
 
-    return _stage_view(spark, build, "hamsig", view, ("label",))
+    return P.stage_view(spark, build, "hamsig", view, ("label",))
 
 
 def hamming_knn_graph_staged(
@@ -2514,7 +2445,7 @@ def _guard_assign_rel(
         f"WITH sig AS (SELECT vec_id, label, lo, hi FROM {rel}),\n{chain}\n"
         "SELECT label, vec_id, lo, hi, sub_cell FROM assign"
     ).format(**_GUARD_SPARK_FRAGS)
-    return _stage_view(
+    return P.stage_view(
         spark, lambda: spark.sql(sql), "guard_assign", view, (cell_cap,)
     )
 
@@ -2542,7 +2473,7 @@ SELECT label, src, dst FROM (
   FROM {rel} a JOIN {rel} b
     ON a.label = b.label AND a.vec_id <> b.vec_id{esrc_where}
 ) r WHERE rk <= {k}"""
-    return _stage_view(
+    return P.stage_view(
         spark, lambda: spark.sql(sql), "guard_etopk", view, (k, src_modulus)
     )
 
@@ -3001,7 +2932,7 @@ SELECT q_id, n_id FROM (
          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY c DESC, n_id) AS rk
   FROM s
 ) r WHERE rk <= {k}"""
-        return _stage_view(
+        return P.stage_view(
             spark, lambda: spark.sql(body), "mat_topk", view, (d, k, n_queries)
         )
 
@@ -3167,7 +3098,7 @@ def ivf_nprobe_sweep_staged(
     # Q x N kernel once per config) under a content-addressed name —
     # params in the key, so concurrent sweeps with different k or
     # n_queries never clobber each other.
-    exact_name = _stage_view(
+    exact_name = P.stage_view(
         spark,
         lambda: cosine_topk_staged(spark, k, n_queries, view).select("q_id", "n_id"),
         "nprobe_exact",
@@ -3189,7 +3120,7 @@ def ivf_nprobe_sweep_staged(
     nv_rel = f"(SELECT vec_id, embedding, nrm FROM {assign_rel} WHERE rn = 1)"
     max_p = max(probes)
     sdot = _dot("qv.embedding", "nv2.embedding", one_based=False)
-    scored_name = _stage_view(
+    scored_name = P.stage_view(
         spark,
         lambda: spark.sql(
             f"""
@@ -3386,7 +3317,7 @@ def _hamsig_rel(spark: SparkSession, view: str) -> str:
             f"{_sign_word_sql(1, one_based=False)} AS hi FROM {view}"
         )
 
-    return _stage_view(spark, build, "hamsig", view, ("label",) if has_label else ())
+    return P.stage_view(spark, build, "hamsig", view, ("label",) if has_label else ())
 
 
 def hamming_banded_staged(

@@ -1773,7 +1773,7 @@ def test_graph_stage_caches_evict_stale_lineage(spark):
     views(spark, "/root/testdata/sf0.01")
     sym2 = graph._bfs_stage(spark)[0]
     assert sym2 is not sym1
-    keys = [k for k in graph._BFS_STAGE_CACHE if k[0] == tok]
+    keys = [k for k in P._MEMO if k[0] == tok and k[1] == "bfs_stage"]
     assert len(keys) == 1  # stale entry gone
     assert not sym1.storageLevel.useMemory  # and unpersisted
     assert sym2.storageLevel.useMemory or sym2.storageLevel.useDisk

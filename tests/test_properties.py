@@ -427,10 +427,14 @@ def test_triangle_stats_matches_bruteforce(spark, edges):
     """Degree-oriented distributed census == brute force on any random
     multigraph (self-loops, duplicate and reversed edges included —
     canonicalization must absorb them all)."""
+    from etl_service_spark.functions.portable import stage_name
     from etl_service_spark.operators.graph import triangle_stats
 
-    df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    row = triangle_stats(df).collect()[0]
+    # the census memoizes its stages on the edge view's name, so the
+    # name must address the content, like the staged pairs view's does
+    view = stage_name("tri_probe", tuple(edges))
+    spark.createDataFrame(edges, ["doc_a", "doc_b"]).createOrReplaceTempView(view)
+    row = triangle_stats(spark, view).collect()[0]
     n_nodes, n_edges, wedges, tris = _brute_triangle_stats(edges)
     assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (
         n_nodes,

@@ -54,6 +54,91 @@ def test_staged_families_green_with_parquet_staging(spark, sf_dir, staging_dir, 
     assert not problems, f"{name}: " + " | ".join(problems)
 
 
+# Families whose repeats used to leave residue: per-call temp views
+# (id()/uuid-named helper views) or, under stagingDir, per-call staging
+# directories (stages keyed on a checkpointed input's fresh lineage).
+HYGIENE_FAMILIES = [
+    "graph_triangle_count",
+    "ann_cosine_topk",
+    "ann_int8_recall",
+    "dedup_strategy_sweep",
+    "dedup_ngram_jaccard",
+    "text_tfidf_top_terms",
+    "basket_brand_pairs",
+]
+
+
+@pytest.mark.parametrize("name", HYGIENE_FAMILIES)
+def test_repeats_leave_no_session_residue(spark, sf_dir, staging_dir, name):
+    """Repeating a query adds no temp view and no staging-dir entry:
+    run 1 builds the memoized stages, runs 2 and 3 must leave the
+    session exactly as they found it. Persisted-RDD counts are not
+    asserted: they move with JVM garbage collection."""
+
+    def state() -> tuple[int, int]:
+        views = sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+        return views, len(os.listdir(staging_dir)) if os.path.isdir(staging_dir) else 0
+
+    after = []
+    for _ in range(3):
+        CASES[name].spark(spark, sf_dir).collect()
+        after.append(state())
+    assert after[2] == after[1], f"{name}: (temp views, staging entries) per run {after}"
+
+
+def test_memo_under_concurrent_requests():
+    """Orchestrator steps share one session from a thread pool. Many
+    threads asking for one staged relation at once get ONE build and
+    its value; threads racing different lineages of one (kind, params)
+    leave exactly one entry — every other lineage was evicted."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from etl_service_spark.functions import portable as P
+
+    session = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default: default))
+    builds: list[str] = []
+
+    def build(tag: str):
+        def run() -> str:
+            builds.append(tag)
+            time.sleep(0.01)
+            return tag
+
+        return run
+
+    def run_all(lineages: list[str], out: list) -> None:
+        threads = [
+            threading.Thread(
+                target=lambda lin=lin: out.append(
+                    P.memo(session, "stress", (1,), lin, build(lin))
+                )
+            )
+            for lin in lineages
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        same: list[str] = []
+        run_all(["L0"] * 32, same)
+        assert builds == ["L0"] and same == ["L0"] * 32
+        mixed: list[str] = []
+        run_all([f"L{i % 4}" for i in range(32)], mixed)
+        assert sorted(mixed) == sorted(f"L{i % 4}" for i in range(32))
+        tok = P.session_token(session)
+        assert len([k for k in P._MEMO if k[0] == tok and k[1] == "stress"]) == 1
+    finally:
+        sys.setswitchinterval(old)
+
+
 def test_parquet_staging_actually_writes(spark, sf_dir, staging_dir):
     from etl_service_spark.operators import dedup
     from etl_service_spark.plans.queries import views
@@ -132,7 +217,11 @@ def test_neardup_blocks_size_driven():
 def test_broadcast_threshold_parser(spark):
     """ADVICE r11: unit-suffixed autoBroadcastJoinThreshold values must
     parse instead of silently falling back to 10 MiB and flipping the
-    size-adaptive join branches."""
+    size-adaptive join branches. An unparseable value fails closed (0);
+    Spark rejects it at conf.set, so it reaches the parser through a
+    stand-in session."""
+    from types import SimpleNamespace
+
     from etl_service_spark.operators.graph import _broadcast_threshold_bytes
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -146,5 +235,7 @@ def test_broadcast_threshold_parser(spark):
         ):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
             assert _broadcast_threshold_bytes(spark) == want, raw
+        garbage = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default: "garbage"))
+        assert _broadcast_threshold_bytes(garbage) == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
